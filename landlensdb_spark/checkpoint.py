@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,33 +86,3 @@ class CheckpointTable:
             F.sum("rows_in").alias("rows_in"),
             F.sum("rows_out").alias("rows_out"),
         )
-
-
-def run_stage(
-    ckpt: CheckpointTable,
-    stage: str,
-    work: DataFrame,
-    unit_col: str,
-    process: "callable",
-    run_id: str | None = None,
-) -> DataFrame | None:
-    """Execute ``process(pending_work) -> (result_df, rows_in, rows_out)``
-    over not-yet-completed units, then log one success row per unit.
-
-    Returns the result DataFrame (None when nothing is pending — the
-    skip-existing fast path of cloud.py:510-516).
-    """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    pending = ckpt.pending(work, stage, unit_col)
-    unit_rows = pending.groupBy(unit_col).count().collect()
-    if not unit_rows:
-        return None
-    result, per_unit_out = process(pending)
-    ckpt.log(
-        [
-            (run_id, stage, int(r[unit_col]), 0, int(r["count"]),
-             int(per_unit_out.get(r[unit_col], 0)), SUCCESS)
-            for r in unit_rows
-        ]
-    )
-    return result

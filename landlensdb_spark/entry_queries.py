@@ -3604,10 +3604,11 @@ def q_media_meta_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gotcha pinned here on purpose: ``exp_phash`` must ride through the
     ``decode_media``/``media_phash`` Arrow hops NULL-FREE (0 sentinel for
-    the non-claiming classes, selected by ``codec`` downstream). Arrow ->
-    pandas inside mapInPandas turns a nullable long column into float64
-    (NaN-backed), silently rounding |x| > 2^53 — a 64-bit hash loses its
-    low bits and every Hamming distance lands at 3-9 instead of 0."""
+    the non-claiming classes, selected by ``codec`` downstream). The media
+    operators carry it through as Arrow, so a NULL would also survive, but
+    the fixture generator below is a pandas stage, and pandas stores an
+    int column holding a None as float64, where |x| > 2^53 loses its low
+    bits."""
     from collections.abc import Iterator
 
     import numpy as np

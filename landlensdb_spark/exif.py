@@ -16,7 +16,7 @@ self-encoded fixtures:
   (image.py:140-163: d + m/60 + s/3600, S/W negation);
 - :func:`encode_jpeg_exif` — minimal valid JPEG writer (SOI, APP1, SOS
   stub, EOI) for deterministic fixtures, in either byte order;
-- :func:`extract_exif` — the Spark operator: ONE ``mapInPandas`` pass over
+- :func:`extract_exif` — the Spark operator: ONE ``mapInArrow`` pass over
   a binary image column. Byte-format walking is inherently per-record
   branchy logic, so each Arrow batch runs a tight python loop over its rows
   (like the MVT decoder) — the engine-level contract (no shuffle, binary
@@ -26,10 +26,11 @@ self-encoded fixtures:
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from landlensdb_spark.passthrough import map_pass_through
 
 # TIFF value types we decode (public spec numbering)
 _T_BYTE, _T_ASCII, _T_SHORT, _T_LONG, _T_RATIONAL = 1, 2, 3, 4, 5
@@ -254,9 +255,9 @@ def encode_jpeg_exif(
 # Spark operator
 # ---------------------------------------------------------------------------
 
-def extract_exif_pdf(images: pd.Series) -> pd.DataFrame:
-    """Batch kernel: Series of JPEG bytes -> (lat, lon, focal_mm,
-    camera_model, exif_dt); NaN/None where absent."""
+def _exif_columns(images) -> dict[str, list]:
+    """Batch kernel: JPEG bytes -> lists (lat, lon, focal_mm, camera_model,
+    exif_dt); None where absent."""
     lats, lons, focals, models, dts = [], [], [], [], []
     for b in images:
         tags = parse_exif_bytes(b)
@@ -283,15 +284,21 @@ def extract_exif_pdf(images: pd.Series) -> pd.DataFrame:
         focals.append(focal)
         models.append(model)
         dts.append(dt)
-    return pd.DataFrame(
-        {
-            "lat": pd.array(lats, dtype="float64"),
-            "lon": pd.array(lons, dtype="float64"),
-            "focal_mm": pd.array(focals, dtype="float64"),
-            "camera_model": models,
-            "exif_dt": dts,
-        }
-    )
+    return {
+        "lat": lats,
+        "lon": lons,
+        "focal_mm": focals,
+        "camera_model": models,
+        "exif_dt": dts,
+    }
+
+
+def extract_exif_pdf(images: pd.Series) -> pd.DataFrame:
+    """:func:`_exif_columns` as a DataFrame; NaN/None where absent."""
+    cols = _exif_columns(images)
+    for c in ("lat", "lon", "focal_mm"):
+        cols[c] = pd.array(cols[c], dtype="float64")
+    return pd.DataFrame(cols)
 
 
 def extract_exif(
@@ -300,23 +307,17 @@ def extract_exif(
     drop_untagged: bool = True,
     drop_bytes: bool = True,
 ) -> DataFrame:
-    """Attach EXIF columns decoded from real JPEG bytes (one mapInPandas
+    """Attach EXIF columns decoded from real JPEG bytes (one mapInArrow
     pass, binary column dropped before anything shuffles — the byte-level
     twin of extract_geotags' html path)."""
-    keep = [f for f in df.schema.fields if not (drop_bytes and f.name == image_col)]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in keep] + [EXIF_COLS]
-    )
-    keep_names = [f.name for f in keep]
+    keep = [c for c in df.columns if not (drop_bytes and c == image_col)]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ext = extract_exif_pdf(pdf[image_col])
-            out = pdf[keep_names].copy()
-            for c in ext.columns:
-                out[c] = ext[c].to_numpy() if ext[c].dtype.kind == "f" else ext[c]
-            if drop_untagged:
-                out = out[out["lat"].notna() & out["lon"].notna()]
-            yield out
+    def _run(b):
+        cols = _exif_columns(b.column(image_col).to_pylist())
+        rows = None
+        if drop_untagged:
+            rows = [i for i, v in enumerate(cols["lat"]) if v is not None]
+            cols = {c: [v[i] for i in rows] for c, v in cols.items()}
+        return rows, cols
 
-    return df.mapInPandas(_run, out_schema)
+    return map_pass_through(df, keep, [image_col], EXIF_COLS, _run)

@@ -56,7 +56,9 @@ def np_merc_x(lon: np.ndarray) -> np.ndarray:
 def np_merc_y(lat: np.ndarray) -> np.ndarray:
     """numpy twin of :func:`merc_y`."""
     lat = np.asarray(lat, dtype=np.float64)
-    return R * np.log(np.tan(math.pi / 4.0 + np.radians(lat) / 2.0))
+    # the poles map to -inf/+inf on purpose; callers clamp
+    with np.errstate(divide="ignore"):
+        return R * np.log(np.tan(math.pi / 4.0 + np.radians(lat) / 2.0))
 
 
 def np_inv_merc(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -64,21 +66,3 @@ def np_inv_merc(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lon = np.degrees(np.asarray(x, dtype=np.float64) / R)
     lat = np.degrees(2.0 * np.arctan(np.exp(np.asarray(y, dtype=np.float64) / R)) - math.pi / 2.0)
     return lon, lat
-
-
-def meters_bbox_expr(lon: Column, lat: Column, distance_m: float) -> list[Column]:
-    """±distance/2 box around a point, computed in 3857 then back-projected.
-
-    Mirrors the reference's ``create_bbox_from_point``
-    (/root/reference/landlensdb/process/snap.py:78-115): project to 3857,
-    expand by d/2 per side, back-project. Returns [minx, miny, maxx, maxy]
-    columns in degrees.
-    """
-    half = F.lit(distance_m / 2.0)
-    mx, my = merc_x(lon), merc_y(lat)
-    return [
-        inv_merc_lon(mx - half),
-        inv_merc_lat(my - half),
-        inv_merc_lon(mx + half),
-        inv_merc_lat(my + half),
-    ]

@@ -87,11 +87,6 @@ def _words(df: DataFrame, text: str) -> DataFrame:
     )
 
 
-def _initial_symbols(word: Column) -> Column:
-    """word -> array of single-char symbols + end-of-word marker."""
-    return F.concat(F.split(word, ""), F.array(F.lit(EOW)))
-
-
 def _merge_pair(syms: Column, left: str, right: str) -> Column:
     """Greedy left-to-right non-overlapping merge of adjacent (left,
     right) symbol pairs — one fold, no Python. The column-math twin of

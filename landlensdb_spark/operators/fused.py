@@ -40,19 +40,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from landlensdb_spark.broadcast_memo import BroadcastMemo, worker_state
 from landlensdb_spark.geo.cells import np_cell_encode
 from landlensdb_spark.operators.pip_join import (
     _collect_polygons,
     pack_refine_state,
     refine_points,
 )
+from landlensdb_spark.passthrough import map_pass_through
 
-#: driver-side memo of broadcast (rings, cover, res) bundles per polygon
-#: table (strong ref kept so id() keys cannot be recycled).
-_prep_cache: dict[tuple, tuple] = {}
-
-#: executor-side memo of unpacked cover frames + packed ring tensors.
-_worker_cache: dict[tuple, tuple] = {}
+#: driver-side memo of broadcast (rings, cover, res) bundles per polygon table
+_memo = BroadcastMemo()
 
 
 def extract_pip(
@@ -73,120 +71,66 @@ def extract_pip(
     inside k overlapping polygons yields k rows (same contract as
     ``pip_join(extract_geotags(pages), polygons)``).
     """
-    import uuid
 
-    spark = pages.sparkSession
-    ck = (id(polygons), polygon_id, rings_col)
-    hit = _prep_cache.get(ck)
-    if hit is None:
+    def _prep():
         rings_by_id, cover_rows, res_set = _collect_polygons(
             polygons, polygon_id, rings_col
         )
-        cover_np = np.array(
-            [(c, p, f) for _, c, p, f in cover_rows], dtype=np.int64
-        )
-        bc = spark.sparkContext.broadcast(
-            (rings_by_id, cover_np, sorted(res_set))
-        )
-        # unique per-prep token for the worker cache: the id()-based memo key
-        # can be recycled after eviction + GC, which would make long-lived
-        # python workers serve a STALE polygon table for a new broadcast
-        token = uuid.uuid4().hex
-        if len(_prep_cache) >= 8:
-            # release the evicted entry's executor broadcast blocks — dropping
-            # the Broadcast ref alone leaks them for the life of the app
-            _evicted = _prep_cache.pop(next(iter(_prep_cache)))
-            _evicted[1].destroy()
-        _prep_cache[ck] = (polygons, bc, token)
-    else:
-        bc, token = hit[1], hit[2]
+        cover_np = np.array([(c, p, f) for _, c, p, f in cover_rows], dtype=np.int64)
+        return (rings_by_id, cover_np, sorted(res_set)), None
 
-    if keep is not None:
-        # loud-failure twin of extract.extract_geotags' keep= validation: a
-        # typo'd name must not silently narrow the output
-        unknown = sorted(set(keep) - {f.name for f in pages.schema.fields})
-        if unknown:
-            raise ValueError(f"keep= names not in the input schema: {unknown}")
-    keep_fields = [
-        f
-        for f in pages.schema.fields
-        if (keep is None and f.name != html) or (keep is not None and f.name in keep)
-    ]
-    keep_names = [f.name for f in keep_fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in keep_fields]
-        + ["lon double", "lat double"]
-        + (["text_extracted string"] if with_text else [])
-        + [f"{polygon_id} bigint"]
-    )
-    key = token
-
-    def _get_state():
-        if key not in _worker_cache:
-            rings_by_id, cover_np, res_sorted = bc.value
-            cover_pdf = pd.DataFrame(
-                {
-                    "_cell": cover_np[:, 0],
-                    "_pid": cover_np[:, 1],
-                    "_full": cover_np[:, 2].astype(bool),
-                }
-            )
-            if len(_worker_cache) >= 8:
-                _worker_cache.pop(next(iter(_worker_cache)))
-            _worker_cache[key] = (
-                cover_pdf,
-                res_sorted,
-                pack_refine_state(rings_by_id),
-            )
-        return _worker_cache[key]
-
-    # ship ONLY the needed columns through the Arrow boundary: the python
-    # stage reads `html` + the kept columns, but mapInPandas serializes
-    # every input column — on the bench pages table the unused `text`
-    # column alone is ~1/3 of the transferred bytes
-    pages = pages.select(*keep_names, html) if html not in keep_names else (
-        pages.select(*keep_names)
+    bc, token, _ = _memo.get(
+        pages.sparkSession, (id(polygons), polygon_id, rings_col), polygons, _prep
     )
 
-    def _run(batches):
-        import pyarrow as pa
+    def _unpack():
+        rings_by_id, cover_np, res_sorted = bc.value
+        cover_pdf = pd.DataFrame(
+            {
+                "_cell": cover_np[:, 0],
+                "_pid": cover_np[:, 1],
+                "_full": cover_np[:, 2].astype(bool),
+            }
+        )
+        return cover_pdf, res_sorted, pack_refine_state(rings_by_id)
 
+    if keep is None:
+        keep = [c for c in pages.columns if c != html]
+
+    def _run(b):
         from landlensdb_spark.extract import extract_geotag_pa
 
-        cover_pdf, res_sorted, state = _get_state()
-        for b in batches:
-            col = b.column(b.schema.get_field_index(html))
-            s = col.cast(pa.string()) if pa.types.is_binary(col.type) else col
-            lat, lon, text = extract_geotag_pa(s, with_text=with_text)
-            tagged = np.where(~(np.isnan(lat) | np.isnan(lon)))[0]
-            lon, lat = lon[tagged], lat[tagged]
-            # candidate (point, polygon) pairs: cell ids at every cover
-            # resolution, hash-merged against the cover table (C-speed).
-            cells = np.concatenate(
-                [np_cell_encode(lon, lat, r) for r in res_sorted]
-            )
-            idx = np.tile(np.arange(len(lon), dtype=np.int64), len(res_sorted))
-            cand = pd.DataFrame({"_cell": cells, "_i": idx}).merge(
-                cover_pdf, on="_cell", how="inner"
-            )
-            ii = cand["_i"].to_numpy()
-            pids = cand["_pid"].to_numpy()
-            inside = cand["_full"].to_numpy()  # interior cells: contained, free
-            boundary = np.where(~inside)[0]
-            if len(boundary):
-                bb = boundary
-                inside = inside.copy()
-                inside[bb] = refine_points(state, lon[ii[bb]], lat[ii[bb]], pids[bb])
-            sel = np.where(inside)[0]
-            src = tagged[ii[sel]]
-            # output = Arrow take of the pass-through columns (no pandas
-            # round-trip of the row payload) + the computed columns
-            tb = pa.Table.from_batches([b]).select(keep_names).take(pa.array(src))
-            tb = tb.append_column("lon", pa.array(lon[ii[sel]], type=pa.float64()))
-            tb = tb.append_column("lat", pa.array(lat[ii[sel]], type=pa.float64()))
-            if with_text:
-                tb = tb.append_column("text_extracted", text.take(pa.array(src)))
-            tb = tb.append_column(polygon_id, pa.array(pids[sel], type=pa.int64()))
-            yield from tb.combine_chunks().to_batches()
+        cover_pdf, res_sorted, state = worker_state(token, _unpack)
+        lat, lon, text = extract_geotag_pa(b.column(html), with_text=with_text)
+        tagged = np.where(~(np.isnan(lat) | np.isnan(lon)))[0]
+        lon, lat = lon[tagged], lat[tagged]
+        # candidate (point, polygon) pairs: cell ids at every cover
+        # resolution, hash-merged against the cover table (C-speed).
+        cells = np.concatenate([np_cell_encode(lon, lat, r) for r in res_sorted])
+        idx = np.tile(np.arange(len(lon), dtype=np.int64), len(res_sorted))
+        cand = pd.DataFrame({"_cell": cells, "_i": idx}).merge(
+            cover_pdf, on="_cell", how="inner"
+        )
+        ii = cand["_i"].to_numpy()
+        pids = cand["_pid"].to_numpy()
+        inside = cand["_full"].to_numpy()  # interior cells: contained, free
+        boundary = np.where(~inside)[0]
+        if len(boundary):
+            bb = boundary
+            inside = inside.copy()
+            inside[bb] = refine_points(state, lon[ii[bb]], lat[ii[bb]], pids[bb])
+        sel = ii[inside]
+        rows = tagged[sel]
+        return rows, {
+            "lon": lon[sel],
+            "lat": lat[sel],
+            "text_extracted": text.take(rows) if with_text else None,
+            polygon_id: pids[inside],
+        }
 
-    return pages.mapInArrow(_run, out_schema)
+    fields = (
+        "lon double, lat double"
+        + (", text_extracted string" if with_text else "")
+        + f", {polygon_id} bigint"
+    )
+    return map_pass_through(pages, keep, [html], fields, _run)

@@ -481,6 +481,10 @@ def knn_join(
     product (None disables the cap). Both extra passes are lazy branches
     of the same single action and see only the (normally empty) residual
     probe set.
+
+    Construction itself runs Spark jobs on the fixed-ring path: an eager
+    ``localCheckpoint`` of the primary top-k and ``isEmpty()`` on the
+    probes it left unresolved.
     """
     if grid not in ("square", "hex"):
         raise ValueError(f"grid must be 'square' or 'hex', got {grid!r}")

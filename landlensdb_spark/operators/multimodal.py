@@ -20,8 +20,9 @@ Contract per modality:
 - ``frame_sample``: binary -> array<binary> (video frame sampling)
 - ``feature``: binary -> array<float> (embedding extraction)
 
-Batch shape: ``mapInPandas`` so one Arrow batch of N binaries is decoded in
-one vectorized call; memory per task = batch_rows x max_payload, which is
+Batch shape: one ``mapInArrow`` pass (:mod:`landlensdb_spark.passthrough`)
+decodes an Arrow batch of N binaries in one call and takes the other
+columns through as Arrow; memory per task = batch_rows x max_payload, which is
 why media tables should set ``spark.sql.execution.arrow.maxRecordsPerBatch``
 small (512) and ``maxPartitionBytes`` large.
 """
@@ -29,42 +30,13 @@ small (512) and ``maxPartitionBytes`` large.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from landlensdb_spark.passthrough import map_pass_through
 
 META_SCHEMA = "width int, height int, n_frames int, codec string, ok boolean"
-
-#: |x| <= 2**53 survives an int64 -> float64 -> long round-trip exactly.
-_FLOAT64_EXACT_INT = float(1 << 53)
-
-
-def _guard_long_precision(pdf: pd.DataFrame, long_cols: list[str]) -> None:
-    """Fail LOUDLY on the Arrow->pandas nullable-long precision trap.
-
-    Spark's Arrow->pandas conversion inside mapInPandas turns a long
-    column that contains NULLs in the batch into float64 (NaN-backed).
-    Values with |x| > 2**53 then silently lose their low bits — a 64-bit
-    hash riding through a media pass-through operator comes out a few
-    Hamming bits off with no error anywhere. Smaller magnitudes round-trip
-    exactly and are passed through unharmed, so this guard only rejects
-    batches that have ALREADY been corrupted beyond recovery; callers
-    should null-fill (sentinel) such columns or re-join them after the
-    media stage instead."""
-    for c in long_cols:
-        s = pdf[c]
-        if s.dtype == np.float64:
-            bad = s.abs().max()  # NaN-safe: max skips NaN
-            if bad == bad and bad > _FLOAT64_EXACT_INT:
-                raise ValueError(
-                    f"column '{c}' is a nullable long with |values| > 2^53: "
-                    "Arrow->pandas upcast it to float64 and its low bits are "
-                    "already lost. Null-fill it with a sentinel before the "
-                    "media stage, or join it back afterwards."
-                )
 
 
 def default_decode(payload: bytes) -> tuple[int, int, int, str, bool]:
@@ -202,67 +174,43 @@ DECODERS = {"decode": default_decode, "thumbnail": _default_thumbnail}
 
 def decode_media(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Attach a media_meta struct column via one Arrow-batched pass."""
-    keep = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-    out_schema = ", ".join(
-        keep + ["width int", "height int", "n_frames int", "codec string", "ok boolean"]
-    )
-    names = [f.name for f in df.schema.fields]
-
     # capture at plan-build time: python workers re-import this module, so
     # a DECODERS swap made on the driver must travel inside the closure
     dec = DECODERS["decode"]
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
 
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            metas = [dec(b) for b in pdf[media_col]]
-            out = pdf[names].copy()
-            cols = list(zip(*metas)) if metas else [[], [], [], [], []]
-            for i, c in enumerate(("width", "height", "n_frames", "codec", "ok")):
-                out[c] = list(cols[i]) if metas else []
-            yield out
+    def _dec(b):
+        metas = [dec(p) for p in b.column(media_col).to_pylist()]
+        cols = list(zip(*metas)) if metas else [[]] * 5
+        return None, dict(zip(("width", "height", "n_frames", "codec", "ok"), cols))
 
-    return df.mapInPandas(_dec, out_schema)
+    return map_pass_through(df, df.columns, [], META_SCHEMA, _dec)
 
 
 def media_thumbnail(
     df: DataFrame, media_col: str = "media", max_w: int = 128, max_h: int = 128
 ) -> DataFrame:
     """Attach (thumb binary, thumb_w int, thumb_h int) via one Arrow-batched
-    pass — the reference's thumbnail op
-    (/root/reference/landlensdb/handlers/image.py:95-138) as a mapInPandas
-    stage. PNG payloads produce real thumbnails (in-repo codec, shrink-only
+    pass — the reference's thumbnail op (``handlers/image.py:95-138``) as
+    a mapInArrow stage. PNG payloads produce real thumbnails (in-repo codec, shrink-only
     aspect-preserving box filter); undecodable payloads yield nulls."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["thumb binary", "thumb_w int", "thumb_h int"]
-    )
-
     thumbnail = DECODERS["thumbnail"]  # captured at plan-build time (see _dec)
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
 
-    def _thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _thumb(b):
         from landlensdb_spark.operators.jpeg import jpeg_dims
         from landlensdb_spark.operators.raster import png_dims
 
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            thumbs, ws, hs = [], [], []
-            for b in pdf[media_col]:
-                t = None if b is None or len(b) == 0 else thumbnail(b, max_w, max_h)
-                d = (png_dims(t) or jpeg_dims(t)) if t is not None else None
-                thumbs.append(t)
-                ws.append(d[0] if d else None)
-                hs.append(d[1] if d else None)
-            out["thumb"] = thumbs
-            out["thumb_w"] = pd.array(ws, dtype="Int32")
-            out["thumb_h"] = pd.array(hs, dtype="Int32")
-            yield out
+        thumbs, ws, hs = [], [], []
+        for p in b.column(media_col).to_pylist():
+            t = None if p is None or len(p) == 0 else thumbnail(p, max_w, max_h)
+            d = (png_dims(t) or jpeg_dims(t)) if t is not None else None
+            thumbs.append(t)
+            ws.append(d[0] if d else None)
+            hs.append(d[1] if d else None)
+        return None, {"thumb": thumbs, "thumb_w": ws, "thumb_h": hs}
 
-    return df.mapInPandas(_thumb, out_schema)
+    return map_pass_through(
+        df, df.columns, [], "thumb binary, thumb_w int, thumb_h int", _thumb
+    )
 
 
 def media_features(
@@ -270,22 +218,20 @@ def media_features(
 ) -> DataFrame:
     """binary -> deterministic feature vector (stub: md5-seeded; production:
     a real vision/audio encoder). Output: (id, feature array<float>)."""
-    out_schema = f"{id_col} string, feature array<float>"
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[media_col]:
-                if b is None or len(b) == 0:
-                    feats.append(np.zeros(dim, dtype=np.float32))
-                    continue
-                seed = int.from_bytes(hashlib.md5(b).digest()[:8], "big") % (2**32)
-                feats.append(
-                    np.random.default_rng(seed).standard_normal(dim).astype(np.float32)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "feature": feats})
+    def _feat(b):
+        feats = []
+        for p in b.column(media_col).to_pylist():
+            if p is None or len(p) == 0:
+                feats.append(np.zeros(dim, dtype=np.float32))
+                continue
+            seed = int.from_bytes(hashlib.md5(p).digest()[:8], "big") % (2**32)
+            feats.append(
+                np.random.default_rng(seed).standard_normal(dim).astype(np.float32)
+            )
+        return None, {"feature": feats}
 
-    return df.mapInPandas(_feat, out_schema)
+    return map_pass_through(df, [id_col], [media_col], "feature array<float>", _feat)
 
 
 def frame_sample(
@@ -297,45 +243,30 @@ def frame_sample(
     multi-image GIFs (block re-wrap via operators/gif.py; each element is
     a standalone single-image GIF); other payloads yield an empty array
     honestly — no synthetic slicing in the production path."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["frames array<binary>"]
-    )
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
 
-    def _fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _fs(b):
         from landlensdb_spark.operators.gif import gif_frames
         from landlensdb_spark.operators.video import mjpeg_frames
 
-        def _grab(b: bytes) -> list[bytes]:
-            if b[:6] in (b"GIF87a", b"GIF89a"):
-                return gif_frames(b)
-            return mjpeg_frames(b)
+        def _grab(p: bytes) -> list[bytes]:
+            if p[:6] in (b"GIF87a", b"GIF89a"):
+                return gif_frames(p)
+            return mjpeg_frames(p)
 
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            frames = []
-            for b in pdf[media_col]:
-                if b is None or len(b) == 0:
-                    frames.append([])
-                    continue
-                try:  # one parse: unknown AND corrupt/truncated payloads
-                    # both degrade to an empty list per row, never a
-                    # failed task
-                    frames.append(_grab(bytes(b))[::every_n])
-                except ValueError:
-                    frames.append([])
-            out["frames"] = frames
-            yield out
+        frames = []
+        for p in b.column(media_col).to_pylist():
+            if p is None or len(p) == 0:
+                frames.append([])
+                continue
+            try:  # one parse: unknown AND corrupt/truncated payloads
+                # both degrade to an empty list per row, never a
+                # failed task
+                frames.append(_grab(p)[::every_n])
+            except ValueError:
+                frames.append([])
+        return None, {"frames": frames}
 
-    return df.mapInPandas(_fs, out_schema)
-
-
-def with_media_table(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Treat the html payload as the opaque media column (schema adapter)."""
-    return pages.withColumn("media", F.col(html_col))
+    return map_pass_through(df, df.columns, [], "frames array<binary>", _fs)
 
 
 _PHASH_BASIS = None
@@ -383,75 +314,64 @@ def media_phash(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Attach a ``phash long`` column (null for undecodable payloads) in
     one Arrow-batched pass — the image near-dup key: exact-match or
     banded grouping on it is the image analog of text simhash dedup."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["phash long"]
-    )
 
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
-
-    def _ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _ph(b):
         import struct as _struct
         import zlib as _zlib
 
         from landlensdb_spark.operators.jpeg import decode_jpeg, rgb_luma
         from landlensdb_spark.operators.raster import decode_png_gray
 
-        def _jpeg_luma(b: bytes):
-            img = decode_jpeg(b)
+        def _jpeg_luma(p: bytes):
+            img = decode_jpeg(p)
             if img.ndim == 3:  # BT.601 luma — pHash is defined on grayscale
                 img = rgb_luma(img)
             return img
 
-        def _video_luma(b: bytes):
+        def _video_luma(p: bytes):
             # video identity key = pHash of the FIRST frame
             from landlensdb_spark.operators.video import mjpeg_frames
 
-            frames = mjpeg_frames(b)
+            frames = mjpeg_frames(p)
             if not frames:
                 raise ValueError("empty video")
             return _jpeg_luma(frames[0])
 
-        def _gif_luma(b: bytes):
+        def _gif_luma(p: bytes):
             from landlensdb_spark.operators.gif import decode_gif
 
-            img = decode_gif(b)
+            img = decode_gif(p)
             return rgb_luma(img) if img.ndim == 3 else img
 
-        def _tiff_luma(b: bytes):
+        def _tiff_luma(p: bytes):
             from landlensdb_spark.operators.tiff import decode_tiff
 
-            img = decode_tiff(b)
+            img = decode_tiff(p)
             return rgb_luma(img) if img.ndim == 3 else img
 
-        def _webp_luma(b: bytes):
+        def _webp_luma(p: bytes):
             from landlensdb_spark.operators.webp import decode_webp
 
-            return rgb_luma(decode_webp(b)[:, :, :3])
+            return rgb_luma(decode_webp(p)[:, :, :3])
 
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            hashes = []
-            for b in pdf[media_col]:
-                img = None
-                if b is not None and len(b):
-                    for dec in (
-                        decode_png_gray,
-                        _jpeg_luma,
-                        _webp_luma,
-                        _gif_luma,
-                        _tiff_luma,
-                        _video_luma,
-                    ):
-                        try:
-                            img = dec(bytes(b))
-                            break
-                        except (ValueError, _zlib.error, _struct.error):
-                            continue
-                hashes.append(phash64(img) if img is not None else None)
-            out["phash"] = pd.array(hashes, dtype="Int64")
-            yield out
+        hashes = []
+        for p in b.column(media_col).to_pylist():
+            img = None
+            if p is not None and len(p):
+                for dec in (
+                    decode_png_gray,
+                    _jpeg_luma,
+                    _webp_luma,
+                    _gif_luma,
+                    _tiff_luma,
+                    _video_luma,
+                ):
+                    try:
+                        img = dec(p)
+                        break
+                    except (ValueError, _zlib.error, _struct.error):
+                        continue
+            hashes.append(phash64(img) if img is not None else None)
+        return None, {"phash": hashes}
 
-    return df.mapInPandas(_ph, out_schema)
+    return map_pass_through(df, df.columns, [], "phash long", _ph)

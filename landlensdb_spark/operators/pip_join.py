@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from landlensdb_spark.broadcast_memo import BroadcastMemo, worker_state
 from landlensdb_spark.geo.cells import cell_encode
 from landlensdb_spark.geo.geometry import points_in_polygon
 
@@ -37,8 +38,7 @@ MAX_COVER_CELLS = 64
 
 #: memoized build-side prep keyed by the polygon DataFrame object: repeated
 #: joins against the same (immutable) polygon table skip the driver collect.
-#: Values keep a strong ref to the DataFrame so its id() cannot be recycled.
-_PREP_CACHE: dict[tuple[int, str, str], tuple] = {}
+_memo = BroadcastMemo()
 
 
 def _compact_cover_np(
@@ -303,17 +303,16 @@ def pip_join(
     bottom edges inside, right/top outside for rectilinear polygons).
     """
     spark = points.sparkSession
-    key = (id(polygons), polygon_id, rings_col)
-    if key in _PREP_CACHE:
-        _, rings_by_id, cover_rows, res_set, bc = _PREP_CACHE[key]
-    else:
+
+    def _prep():
         rings_by_id, cover_rows, res_set = _collect_polygons(
             polygons, polygon_id, rings_col
         )
-        bc = spark.sparkContext.broadcast(rings_by_id)
-        if len(_PREP_CACHE) > 32:
-            _PREP_CACHE.clear()
-        _PREP_CACHE[key] = (polygons, rings_by_id, cover_rows, res_set, bc)
+        return rings_by_id, (cover_rows, res_set)
+
+    bc, token, (cover_rows, res_set) = _memo.get(
+        spark, (id(polygons), polygon_id, rings_col), polygons, _prep
+    )
 
     # cell ids carry their res in the top bits, so covers at mixed adaptive
     # resolutions coexist in ONE join column; ship via Arrow (fast path).
@@ -328,14 +327,10 @@ def pip_join(
     # executor-side state: single-ring polygons packed into per-ring-length
     # tensors so one batch refines in a handful of vectorized calls; only
     # multi-ring (holed) polygons take the per-polygon path.
-    _state: dict = {}
-
     @F.pandas_udf(BooleanType())
     def _contains(
         lon_s: pd.Series, lat_s: pd.Series, pid_s: pd.Series, full_s: pd.Series
     ) -> pd.Series:
-        if not _state:
-            _state.update(pack_refine_state(bc.value))
         full = full_s.to_numpy(dtype=bool)
         if full.all():
             return pd.Series(full)
@@ -345,7 +340,8 @@ def pip_join(
         px = lon_s.iloc[keep].to_numpy(dtype=np.float64)
         py = lat_s.iloc[keep].to_numpy(dtype=np.float64)
         pids = pid_s.iloc[keep].to_numpy()
-        out_all[keep] = refine_points(_state, px, py, pids)
+        state = worker_state(token, lambda: pack_refine_state(bc.value))
+        out_all[keep] = refine_points(state, px, py, pids)
         return pd.Series(out_all)
 
     # ONE pass over the point side: explode the point's cell id at each

@@ -70,7 +70,8 @@ def sfc_ranges(
     same bbox into ~2x fewer ranges than Morton (measured,
     ARCHITECTURE.md) — Morton is offered because Z-order keys are
     cheaper to compute (pure codegen, no kernel) and some stores
-    already sort by them."""
+    already sort by them. Construction runs one Spark job: the ``collect``
+    of per-prefix-bucket counts for the two-level row numbering."""
     if order not in ("hilbert", "morton"):
         raise ValueError(f"order must be 'hilbert' or 'morton', got {order!r}")
     n = (F.col("x1") - F.col("x0") + 1) * (F.col("y1") - F.col("y0") + 1)

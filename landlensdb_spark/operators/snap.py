@@ -18,40 +18,38 @@ fully-vectorized operator:
 Spark shape: the (small) network is flattened driver-side into plain numpy
 segment arrays and broadcast; each executor lazily builds a mercator-grid
 bucket table over segment bboxes (the R-tree stand-in, snap.py:19-31). The
-point side is processed in one ``mapInPandas`` pass — candidate pairs come
+point side is processed in one ``mapInArrow`` pass — candidate pairs come
 from a vectorized pandas hash-merge of point-cells vs bucket-cells (the
 np.repeat/np.concatenate pair expansion of snap.py:206-211, but C-speed), and
 ALL pair distances are computed in one vectorized call. No shuffle at all:
-the job is scan -> mapInPandas -> sink.
+the job is scan -> mapInArrow -> sink.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landlensdb_spark.broadcast_memo import BroadcastMemo, worker_state
 from landlensdb_spark.geo.geometry import align_heading, bearing, point_segment_t
 from landlensdb_spark.geo.mercator import R, np_inv_merc, np_merc_x, np_merc_y
+from landlensdb_spark.passthrough import map_pass_through
 
 WORLD = 2.0 * math.pi * R  # mercator world width in meters
 
 SNAP_COLS = (
-    "(line_id bigint, snap_dist double, snapped_lon double, snapped_lat double, "
-    "snap_pos double, seg_bearing double)"
+    "line_id bigint, snap_dist double, snapped_lon double, snapped_lat double, "
+    "snap_pos double, seg_bearing double"
 )
 
 #: driver-side memo of prepared+broadcast networks, keyed on the network
-#: DataFrame identity + snap params (strong ref kept; bounded at 8 entries).
-_net_cache: dict[tuple, tuple] = {}
-
-#: executor-side memo of unpacked segment arrays + bucket tables, keyed on the
-#: driver token. Lives in the (reused) python worker process across tasks.
-_worker_cache: dict[tuple, tuple] = {}
+#: DataFrame identity + snap params.
+_memo = BroadcastMemo()
 
 
 def _flatten_network(rows) -> dict[str, np.ndarray]:
@@ -139,129 +137,96 @@ def snap_to_network(
     ``round_merc``: optionally round projected coords to N decimals before
     distance math (cross-engine float-parity mode used by the oracle checks).
     """
-    spark = points.sparkSession
     res = _grid_res_for_tolerance(tolerance_m)
     # memoized driver-side prep: collect + flatten + broadcast once per
     # (network, tolerance) — repeated snaps against the same network (the
     # common production shape: one road network, many probe batches) pay the
     # index build once, like the reference's persistent R-tree (snap.py:19-31).
-    # The cache holds a strong ref to the network DataFrame so the id() key
-    # cannot be recycled while its entry lives.
-    import uuid
 
-    ck = (id(network), line_id_col, coords_col, tolerance_m, round_merc)
-    hit = _net_cache.get(ck)
-    if hit is None:
+    def _prep():
         net_rows = [
             (r[0], r[1]) for r in network.select(line_id_col, coords_col).collect()
         ]
-        net = _flatten_network(net_rows)
-        bc = spark.sparkContext.broadcast((net, res, tolerance_m, round_merc))
-        # worker-cache token: unique PER PREP, never id()-derived — after this
-        # dict evicts an entry, CPython may recycle the DataFrame id, and an
-        # id-based token would make long-lived python workers serve the OLD
-        # network's index for the new broadcast
-        token = uuid.uuid4().hex
-        if len(_net_cache) >= 8:
-            # destroy the evicted broadcast: executors otherwise keep its
-            # blocks forever (the Broadcast ref dies, the blocks don't)
-            _evicted = _net_cache.pop(next(iter(_net_cache)))
-            _evicted[1].destroy()
-        _net_cache[ck] = (network, bc, token)
-    else:
-        bc, token = hit[1], hit[2]
+        return (_flatten_network(net_rows), res, tolerance_m, round_merc), None
 
-    in_cols = points.columns
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema)
-    out_schema += (
-        ", line_id bigint, snap_dist double, snapped_lon double, snapped_lat double,"
-        " snap_pos double, seg_bearing double"
-    )
+    ck = (id(network), line_id_col, coords_col, tolerance_m, round_merc)
+    bc, token, _ = _memo.get(points.sparkSession, ck, network, _prep)
 
-    # executor-local cache: bucket table built once per python worker. Keyed
-    # on the driver-generated per-prep token (NOT id(bc): each task unpickles
-    # a fresh Broadcast proxy, so id() would miss every task; and NOT the
-    # id(network)-based memo key, which can be recycled after eviction). The
-    # token stays stable across repeated snaps thanks to the memo above.
-    key = token
+    def _build_index():
+        # bucket table built once per python worker
+        net_, res_, tol_, rm = bc.value
+        seg = {kk: np.asarray(v) for kk, v in net_.items()}
+        if rm is not None:
+            for kk in ("x0", "y0", "x1", "y1"):
+                seg[kk] = np.round(seg[kk], rm)
+        return seg, _bucket_segments(seg, res_, tol_), res_, tol_, rm
 
-    def _get_index():
-        if key not in _worker_cache:
-            net_, res_, tol_, rm = bc.value
-            seg = {kk: np.asarray(v) for kk, v in net_.items()}
-            if rm is not None:
-                for kk in ("x0", "y0", "x1", "y1"):
-                    seg[kk] = np.round(seg[kk], rm)
-            if len(_worker_cache) >= 8:
-                _worker_cache.pop(next(iter(_worker_cache)))
-            _worker_cache[key] = (seg, _bucket_segments(seg, res_, tol_), res_, tol_, rm)
-        return _worker_cache[key]
-
-    def _snap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seg, buckets, res_, tol_, rm = _get_index()
+    def _nearest(b):
+        """Matched point indices and their (line_id, snap_dist, snapped_lon,
+        snapped_lat, snap_pos, seg_bearing), or None when nothing matches."""
+        seg, buckets, res_, tol_, rm = worker_state(token, _build_index)
+        n = b.num_rows
+        if n == 0 or len(seg["x0"]) == 0:
+            return None
+        px = np_merc_x(np.asarray(b.column(lon).to_numpy(zero_copy_only=False), np.float64))
+        py = np_merc_y(np.asarray(b.column(lat).to_numpy(zero_copy_only=False), np.float64))
+        if rm is not None:
+            px, py = np.round(px, rm), np.round(py, rm)
         cellsz = WORLD / (1 << res_)
-        for pdf in batches:
-            n = len(pdf)
-            out = pdf.reset_index(drop=True).copy()
-            for c in ("line_id",):
-                out[c] = pd.array([None] * n, dtype="Int64")
-            for c in ("snap_dist", "snapped_lon", "snapped_lat", "snap_pos", "seg_bearing"):
-                out[c] = np.nan
-            if n == 0 or len(seg["x0"]) == 0:
-                yield out
-                continue
-            px = np_merc_x(pdf[lon].to_numpy(dtype=np.float64))
-            py = np_merc_y(pdf[lat].to_numpy(dtype=np.float64))
-            if rm is not None:
-                px, py = np.round(px, rm), np.round(py, rm)
-            pcx = np.floor((px + WORLD / 2) / cellsz).astype(np.int64)
-            pcy = np.floor((py + WORLD / 2) / cellsz).astype(np.int64)
-            pt_keys = pd.DataFrame(
-                {
-                    "pt_idx": np.arange(n, dtype=np.int64),
-                    "cell_key": (pcx << 28) | pcy,
-                }
-            )
-            pairs = pt_keys.merge(buckets, on="cell_key", how="inner")
-            if len(pairs) == 0:
-                yield out
-                continue
-            pi = pairs["pt_idx"].to_numpy()
-            si = pairs["seg_idx"].to_numpy()
-            # vectorized distance over ALL candidate pairs at once
-            dx0, dy0 = seg["x0"][si], seg["y0"][si]
-            dx1, dy1 = seg["x1"][si], seg["y1"][si]
-            t = point_segment_t(px[pi], py[pi], dx0, dy0, dx1, dy1)
-            nx = dx0 + t * (dx1 - dx0)
-            ny = dy0 + t * (dy1 - dy0)
-            dist = np.sqrt((px[pi] - nx) ** 2 + (py[pi] - ny) ** 2)
-            ok = dist <= tol_
-            if not ok.any():
-                yield out
-                continue
-            pi, si, t, nx, ny, dist = pi[ok], si[ok], t[ok], nx[ok], ny[ok], dist[ok]
-            lid = seg["line_id"][si]
-            # argmin per point with stable (dist, line_id) tie-break
-            order = np.lexsort((lid, dist, pi))
-            pi_s = pi[order]
-            first = np.ones(len(pi_s), dtype=bool)
-            first[1:] = pi_s[1:] != pi_s[:-1]
-            sel = order[first]
-            bi, bs = pi[sel], si[sel]
-            seg_len = np.sqrt(
-                (seg["x1"][bs] - seg["x0"][bs]) ** 2 + (seg["y1"][bs] - seg["y0"][bs]) ** 2
-            )
-            s_lon, s_lat = np_inv_merc(nx[sel], ny[sel])
-            brg = bearing(seg["lon0"][bs], seg["lat0"][bs], seg["lon1"][bs], seg["lat1"][bs])
-            out.loc[bi,"line_id"] = seg["line_id"][bs]
-            out.loc[bi,"snap_dist"] = dist[sel]
-            out.loc[bi,"snapped_lon"] = s_lon
-            out.loc[bi,"snapped_lat"] = s_lat
-            out.loc[bi,"snap_pos"] = seg["cum0"][bs] + t[sel] * seg_len
-            out.loc[bi,"seg_bearing"] = brg
-            yield out
+        pcx = np.floor((px + WORLD / 2) / cellsz).astype(np.int64)
+        pcy = np.floor((py + WORLD / 2) / cellsz).astype(np.int64)
+        pt_keys = pd.DataFrame(
+            {"pt_idx": np.arange(n, dtype=np.int64), "cell_key": (pcx << 28) | pcy}
+        )
+        pairs = pt_keys.merge(buckets, on="cell_key", how="inner")
+        if len(pairs) == 0:
+            return None
+        pi = pairs["pt_idx"].to_numpy()
+        si = pairs["seg_idx"].to_numpy()
+        # vectorized distance over ALL candidate pairs at once
+        dx0, dy0 = seg["x0"][si], seg["y0"][si]
+        dx1, dy1 = seg["x1"][si], seg["y1"][si]
+        t = point_segment_t(px[pi], py[pi], dx0, dy0, dx1, dy1)
+        nx = dx0 + t * (dx1 - dx0)
+        ny = dy0 + t * (dy1 - dy0)
+        dist = np.sqrt((px[pi] - nx) ** 2 + (py[pi] - ny) ** 2)
+        ok = dist <= tol_
+        if not ok.any():
+            return None
+        pi, si, t, nx, ny, dist = pi[ok], si[ok], t[ok], nx[ok], ny[ok], dist[ok]
+        lid = seg["line_id"][si]
+        # argmin per point with stable (dist, line_id) tie-break
+        order = np.lexsort((lid, dist, pi))
+        pi_s = pi[order]
+        first = np.ones(len(pi_s), dtype=bool)
+        first[1:] = pi_s[1:] != pi_s[:-1]
+        sel = order[first]
+        bi, bs = pi[sel], si[sel]
+        seg_len = np.sqrt(
+            (seg["x1"][bs] - seg["x0"][bs]) ** 2 + (seg["y1"][bs] - seg["y0"][bs]) ** 2
+        )
+        s_lon, s_lat = np_inv_merc(nx[sel], ny[sel])
+        brg = bearing(seg["lon0"][bs], seg["lat0"][bs], seg["lon1"][bs], seg["lat1"][bs])
+        pos = seg["cum0"][bs] + t[sel] * seg_len
+        return bi, (seg["line_id"][bs], dist[sel], s_lon, s_lat, pos, brg)
 
-    result = points.mapInPandas(_snap, out_schema)
+    out_names = [f.split()[0] for f in SNAP_COLS.split(", ")]
+
+    def _snap(b):
+        # unmatched rows keep NULL snap columns (NaN -> NULL, masked line_id)
+        hit = np.zeros(b.num_rows, dtype=bool)
+        vals = [np.zeros(b.num_rows, np.int64)]
+        vals += [np.full(b.num_rows, np.nan) for _ in out_names[1:]]
+        matched = _nearest(b)
+        if matched is not None:
+            bi, found = matched
+            hit[bi] = True
+            for v, f in zip(vals, found):
+                v[bi] = f
+        vals[0] = pa.array(vals[0], mask=~hit)
+        return None, dict(zip(out_names, vals))
+
+    result = map_pass_through(points, points.columns, [], SNAP_COLS, _snap)
     if compass is not None:
         # realignment: forward or reverse segment bearing, whichever is
         # angularly closer to the compass angle (snap.py:147-153)
@@ -275,5 +240,5 @@ def snap_to_network(
             .when(d_fwd <= d_rev, b)
             .otherwise(rev),
         )
-    _ = in_cols, align_heading  # numpy twin used in tests
+    _ = align_heading  # numpy twin used in tests
     return result

@@ -10,17 +10,16 @@ as the MVT and EXIF wire codecs in this repo).
 Scale shape: WARC members are read as whole binary blobs
 (``spark.read.format("binaryFile")`` on .warc segments — Common Crawl
 ships ~1 GB segments, a natural Spark split), and record extraction is one
-``mapInPandas`` pass that explodes each blob into its records. Python cost
+``mapInArrow`` pass that explodes each blob into its records. Python cost
 is per RECORD (header parse + slice), payloads are never copied more than
 once, and the stage composes with the html-extraction stage downstream.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from landlensdb_spark.passthrough import map_pass_through
 
 RECORD_SCHEMA = (
     "warc_type string, target_uri string, warc_date string, "
@@ -125,22 +124,14 @@ def warc_records(df: DataFrame, blob_col: str = "content") -> DataFrame:
     clash = sorted(set(keep) & set(_RECORD_FIELDS))
     if clash:
         raise ValueError(f"input columns collide with WARC record fields: {clash}")
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name != blob_col]
-        + [RECORD_SCHEMA]
-    )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # itertuples over the column lists: the per-record WARC parse is
-            # the cost, but iterrows' per-row Series construction is pure
-            # constant overhead on top of it
-            keeps = [pdf[c].tolist() for c in keep]
-            for i, blob in enumerate(pdf[blob_col].tolist()):
-                base = {c: vals[i] for c, vals in zip(keep, keeps)}
-                for rec in parse_warc_bytes(bytes(blob)):
-                    rows.append({**base, **rec})
-            yield pd.DataFrame(rows, columns=keep + list(_RECORD_FIELDS))
+    def _parse(b):
+        rows, cols = [], {c: [] for c in _RECORD_FIELDS}
+        for i, blob in enumerate(b.column(blob_col).to_pylist()):
+            for rec in parse_warc_bytes(blob):
+                rows.append(i)
+                for c in _RECORD_FIELDS:
+                    cols[c].append(rec[c])
+        return rows, cols
 
-    return df.mapInPandas(_parse, out_schema)
+    return map_pass_through(df, keep, [blob_col], RECORD_SCHEMA, _parse)

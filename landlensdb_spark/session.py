@@ -1,6 +1,6 @@
 """SparkSession builder tuned for the engine.
 
-Arrow on (all our Python is Arrow-batched pandas UDFs — the reference's
+Arrow on (all our Python is Arrow-batched — the reference's
 row-at-a-time ``apply``/``iterrows`` hot loops, e.g.
 /root/reference/landlensdb/process/snap.py:139,204, are deliberately NOT
 reproduced), AQE on (runtime re-plan + skew-join splitting replaces the
@@ -45,7 +45,7 @@ def get_spark(
         )
 
     conf = {
-        # Arrow transfer for every pandas UDF / mapInPandas stage. 60k rows
+        # Arrow transfer for every Python stage (mapInArrow, pandas UDFs). 60k rows
         # per batch measured ~7% faster than 20k on the fused extract path
         # (fewer IPC round-trips); at ~0.5-2 KB/row of html that is tens of
         # MB per in-flight batch per worker — rows much wider than this
@@ -72,18 +72,25 @@ def get_spark(
     # measured per-TASK fixed costs in the stock worker loop — the
     # every-task importlib.invalidate_caches() zip-TOC re-parse (63-80ms/
     # task here) and the full-heap gc.collect() between reused tasks (see
-    # pydaemon docstring). Enabled only when the package is importable by
-    # the worker python (same env as the driver on local; shipped/installed
-    # on a real cluster) so a missing module can never kill worker startup.
+    # pydaemon docstring). Enabled only when the driver can import the
+    # package; the package's parent directory then goes first on the
+    # workers' PYTHONPATH, so a driver started outside the checkout (no
+    # PYTHONPATH) cannot hand workers a daemon module they fail to import.
+    shim = False
     if not os.environ.get("SPARK_GRAFT_NO_DAEMON_SHIM"):
         try:
             import landlensdb_spark.pydaemon  # noqa: F401
 
             conf["spark.python.daemon.module"] = "landlensdb_spark.pydaemon"
+            shim = True
         except ImportError:  # pragma: no cover - package not importable
             pass
     if extra_conf:
         conf.update(extra_conf)
+    if shim:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        paths = [root, conf.get("spark.executorEnv.PYTHONPATH")]
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(p for p in paths if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -3,29 +3,28 @@ from both the microdata and EXIF-DMS html forms, null-geotag filtering."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from landlensdb_spark import tables
-from landlensdb_spark.extract import extract_geotag_pdf, extract_geotags
+from landlensdb_spark.extract import extract_geotag_pa, extract_geotags
 
 N = 400
 
 
-def test_pandas_kernel_exact_roundtrip():
+def test_kernel_exact_roundtrip():
     rows = [tables.build_page_row(i) for i in range(N)]
-    pdf = pd.DataFrame(rows, columns=["url", "ts", "html", "text", "lang"])
-    out = extract_geotag_pdf(pdf["html"])
+    got_lat, got_lon, text = extract_geotag_pa(pa.array([r[2] for r in rows]))
 
     # byte-identical text for every row
-    assert (out["text"] == pdf["text"]).all()
+    assert text.to_pylist() == [r[3] for r in rows]
 
     i = np.arange(N)
     has_geo = tables.np_has_geo(i)
     lon, lat = tables.np_page_coords(i)
     # geotagged rows: exact 6-dp coordinates from BOTH html forms
-    got_lat = out["lat"].to_numpy()
-    got_lon = out["lon"].to_numpy()
     assert np.isnan(got_lat[~has_geo]).all()
     assert np.isnan(got_lon[~has_geo]).all()
     assert (got_lat[has_geo] == np.round(lat[has_geo], 6)).all()
@@ -64,21 +63,6 @@ def test_pages_generator_partition_invariance(spark):
     assert (a["html"] == b["html"]).all()
     assert (a["text"] == b["text"]).all()
     assert (a["warc_ts"] == b["warc_ts"]).all()
-
-
-def test_arrow_kernel_matches_pandas_oracle():
-    """The RE2/Arrow hot-path kernel must agree with the pandas reference
-    kernel row-for-row (incl. NaN placement and text bytes)."""
-    import pandas as pd
-
-    from landlensdb_spark.extract import extract_geotag_arrow, extract_geotag_pdf
-
-    html = pd.Series([tables.build_page_row(i, clustered=True)[2] for i in range(5000)])
-    a = extract_geotag_pdf(html).reset_index(drop=True)
-    b = extract_geotag_arrow(html)
-    assert (a["lat"].fillna(-999).round(6) == b["lat"].fillna(-999).round(6)).all()
-    assert (a["lon"].fillna(-999).round(6) == b["lon"].fillna(-999).round(6)).all()
-    assert (a["text"].fillna("") == b["text"].fillna("")).all()
 
 
 # ---------------------------------------------------------------------------
@@ -137,9 +121,6 @@ _EDGE_ROWS = [
 def test_jvm_extraction_matches_arrow_kernel_on_edges(spark):
     import math
 
-    from landlensdb_spark.extract import extract_geotag_pa
-    import pyarrow as pa
-
     df = spark.createDataFrame(
         [(n, h) for n, h in _EDGE_ROWS], "name string, html binary"
     )
@@ -174,3 +155,42 @@ def test_jvm_extraction_drop_untagged_and_no_text_schema(spark):
     )
     narrow = extract_geotags(df, with_text=False, keep=["name"])
     assert narrow.columns == ["name", "lat", "lon"]
+
+
+def _re_reference(html: bytes) -> tuple:
+    """Per-row ``re`` reference of the extraction contract: (lat, lon, text)."""
+    s = html.decode("utf-8")
+
+    def meta(axis):
+        m = re.search(f'<meta property="place:location:{axis}" content="([^"]+)"', s)
+        return np.round(float(m[1]), 6) if m else np.nan
+
+    def dms(axis, refs, neg):
+        m = re.search(rf"GPS{axis}=\((\d+),(\d+),(\d+)/(\d+)\);GPS{axis}Ref=([{refs}])", s)
+        if not m:
+            return np.nan
+        d, mi, n, q = (np.float64(g) for g in m.groups()[:4])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            dec = d + mi / 60.0 + (n / q) / 3600.0
+        return np.round(-dec if m[5] == neg else dec, 6)
+
+    def pick(a, b):  # DMS wins per coordinate unless it is NaN
+        return b if np.isnan(a) else a
+
+    t = re.search(r'<p data-text="1">(.*?)</p>', s)
+    return (pick(dms("Latitude", "NS", "S"), meta("latitude")),
+            pick(dms("Longitude", "EW", "W"), meta("longitude")),
+            t[1] if t else None)
+
+
+def test_kernel_matches_re_reference():
+    """The RE2/Arrow kernel agrees with a per-row ``re`` reference, row for
+    row (incl. NaN placement and text bytes), on clustered pages and on
+    the adversarial edge rows."""
+    html = [tables.build_page_row(i, clustered=True)[2] for i in range(5000)]
+    html += [h for _, h in _EDGE_ROWS]
+    lat, lon, text = extract_geotag_pa(pa.array(html, type=pa.binary()))
+    exp = [_re_reference(h) for h in html]
+    np.testing.assert_array_equal(lat, [e[0] for e in exp])
+    np.testing.assert_array_equal(lon, [e[1] for e in exp])
+    assert text.to_pylist() == [e[2] for e in exp]
